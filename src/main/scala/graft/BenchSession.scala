@@ -59,7 +59,8 @@ object BenchSession {
     // `true` (the Spark default) coalesces only down to minPartitionSize
     // to maximize parallelism; `false` respects advisoryPartitionSizeInBytes
     // — the busy-cluster production recommendation. Default kept at the
-    // Spark default; see OPTIMIZATION_r16.md for the measured comparison.
+    // Spark default: measured pf=true 167.4/153.7 s vs pf=false 178.5/156.5 s
+    // (plans/r16/bench_r16_pf_{a1,a2,b1,b2}.json), no win for false.
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
       sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
     .config("spark.sql.session.timeZone", "UTC")

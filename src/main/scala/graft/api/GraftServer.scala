@@ -167,10 +167,6 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     */
   @volatile private var sliceServed: Set[String] = Set.empty
   private val postDrainHooks = TrieMap.empty[String, () => Unit]
-  // shared archive dirs whose drain marker the epoch token re-checks
-  // AFTER a query body ran (the seqlock read-side end; see
-  // withServingVersion) — one per slice-served table, usually one total
-  @volatile private var epochDirs: Set[String] = Set.empty
 
   /** Wire `table` for slice-mode drains: scheduler drains land in the
     * SHARED day-partitioned archive (delta-promoted via Backfill once it
@@ -188,7 +184,6 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
     sliceServed += table
     postDrainHooks.put(table, onDrained)
     sliceOwnedDay.put(table, ownedDay)
-    epochDirs += sharedArchiveDir
     // pre-seed the drain target: dirFor routes scheduler drains to the
     // shared archive, and drain() takes the Backfill delta path (the
     // shared archive already holds the table's history)
@@ -313,7 +308,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
                     // around this read surfaces as a torn archive epoch
                     // and the broker retries the wave (the new owner's
                     // listing may sit on the other side of the commit)
-                    graft.exec.ArchiveEpoch.note(graft.ingest.DrainMarker
+                    graft.exec.ArchiveEpoch.note(sharedDir, graft.ingest.DrainMarker
                       .read(sharedDir, s.sparkContext.hadoopConfiguration))
                     val sharedKeys = s.read.option("mergeSchema", "true")
                       .parquet(sharedDir)
@@ -494,16 +489,15 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       if (vs.nonEmpty)
         ex.getResponseHeaders.set("X-Graft-Assignment-Version",
           vs.toSeq.sorted.mkString(","))
-      // seqlock read-side end: if the query read a shared archive, check
-      // the marker once more AFTER all its reads ran — a backfill that
+      // seqlock read-side end: re-read the marker of each shared archive
+      // the query read, AFTER all its reads ran — a backfill that
       // began (or committed) since the pre-read makes the epochs
       // disagree, the token reports torn, and the broker retries the
       // wave instead of merging a listing that may straddle the swap
-      if (graft.exec.ArchiveEpoch.collect().isDefined)
-        epochDirs.foreach { d =>
-          graft.exec.ArchiveEpoch.note(graft.ingest.DrainMarker.read(d,
-            spark.sparkContext.hadoopConfiguration))
-        }
+      graft.exec.ArchiveEpoch.noted().foreach { d =>
+        graft.exec.ArchiveEpoch.note(d, graft.ingest.DrainMarker.read(d,
+          spark.sparkContext.hadoopConfiguration))
+      }
       graft.exec.ArchiveEpoch.collect().foreach(
         ex.getResponseHeaders.set("X-Graft-Archive-Epoch", _))
       out
@@ -519,7 +513,7 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
       if (accept == "application/hll") {
         val first = graft.aql.AqlJson.parseRequest(body).queries.head
-        val bin = withServingVersion(ex)(service.aqlBinary(write(first)))
+        val bin = withServingVersion(ex)(service.aqlBinary(first))
         respondBytes(ex, 200, "application/hll", bin)
       } else {
         val out = withServingVersion(ex)(service.aql(body))
@@ -1415,11 +1409,6 @@ final class GraftServer(baseCatalog: Catalog, spark: SparkSession, port: Int = 0
       if (applied > 0)
         log.info(s"journal replay restored $applied batch(es) into table $t's overlay")
     }
-  }
-
-  private def write(q: graft.aql.AqlQuery): String = {
-    implicit val formats: Formats = DefaultFormats
-    org.json4s.jackson.Serialization.write(q)
   }
 
   private def handle(ex: HttpExchange)(f: => Unit): Unit =

@@ -19,12 +19,14 @@ package graft.exec
   *   - writers announce a swap with [[graft.ingest.DrainMarker.beginRewrite]]
   *     (inflight flag) BEFORE the first rename and clear it with the
   *     post-swap `bump` (seq+1);
-  *   - every serving-side read of the shared archive [[note]]s the marker
-  *     it observed (the serving catalog already reads it per query; the
-  *     stranded-delta anti-join reads it before listing shared PKs), and
-  *     the HTTP layer notes it once more AFTER the query body ran;
-  *   - [[collect]] folds the observations into one token: the seq when
-  *     every observation agreed and none was inflight, else TORN;
+  *   - every serving-side read of a shared archive [[note]]s the marker
+  *     it observed under the archive's directory (the serving catalog
+  *     already reads it per query; the stranded-delta anti-join reads it
+  *     before listing shared PKs), and the HTTP layer re-reads every
+  *     [[noted]] directory once more AFTER the query body ran;
+  *   - [[collect]] folds the observations into one token: the seqs when
+  *     every directory's observations agreed and none was inflight, else
+  *     TORN;
   *   - the member surfaces the token as `X-Graft-Archive-Epoch`; the
   *     broker retries any wave with a torn token or mixed epochs.
   *
@@ -37,8 +39,9 @@ object ArchiveEpoch {
   /** The wire value for "this query's archive reads may straddle a swap". */
   val Torn = "torn"
 
+  // observed seqs per shared archive directory
   private final class State {
-    val seqs = scala.collection.mutable.Set.empty[Long]
+    val seqs = scala.collection.mutable.Map.empty[String, Set[Long]]
     var torn = false
   }
 
@@ -46,28 +49,34 @@ object ArchiveEpoch {
 
   def begin(): Unit = tl.set(new State)
 
-  /** Record one observed marker. An inflight marker means a writer is
-    * inside its swap window right now; a corrupt one reads as seq 0 (all
-    * members see the same file, so corruption is consistent across a
-    * wave and must not fail queries that still serve exactly — the
-    * conservative all-from-shared path stays exact).
+  /** Record one marker observed in archive directory `dir`. An inflight
+    * marker means a writer is inside its swap window right now; a corrupt
+    * one reads as seq 0 (all members see the same file, so corruption is
+    * consistent across a wave and must not fail queries that still serve
+    * exactly — the conservative all-from-shared path stays exact).
     */
-  def note(m: graft.ingest.DrainMarker.Marker): Unit =
+  def note(dir: String, m: graft.ingest.DrainMarker.Marker): Unit =
     Option(tl.get).foreach { st =>
       if (m.inflight) st.torn = true
-      st.seqs += m.seq
+      st.seqs(dir) = st.seqs.getOrElse(dir, Set.empty[Long]) + m.seq
     }
+
+  /** The archive directories this query noted — the ones the HTTP layer
+    * re-reads after the query body ran.
+    */
+  def noted(): Seq[String] = Option(tl.get).map(_.seqs.keys.toSeq).getOrElse(Nil)
 
   /** The epoch token for the response header: None when the query never
     * read a shared archive (non-slice deployments, tables outside slice
     * serving); [[Torn]] when any observation was inflight or two
-    * observations disagreed (a swap committed between them).
+    * observations of the same directory disagreed (a swap committed
+    * between them); else each directory's seq, in directory order.
     */
   def collect(): Option[String] =
     Option(tl.get).flatMap { st =>
       if (st.seqs.isEmpty) None
-      else if (st.torn || st.seqs.size > 1) Some(Torn)
-      else Some(st.seqs.head.toString)
+      else if (st.torn || st.seqs.values.exists(_.size > 1)) Some(Torn)
+      else Some(st.seqs.toSeq.sortBy(_._1).map(_._2.head).mkString(","))
     }
 
   def end(): Unit = tl.remove()

@@ -548,116 +548,38 @@ final class Broker private (sliceProvider: () => Seq[Seq[String]],
     * path (query_plan_agg.go postProcessHLLBinary): fetch per-instance
     * binary partials, register-max merge, re-encode ONE result block. A
     * client written against the reference's `application/hll` wire parses
-    * the broker's response unchanged. Per-instance enum dictionaries are
-    * LOCAL (each instance dictionary-encodes the strings it saw), so rows
-    * merge on decoded strings and the output carries fresh dictionaries
-    * over the merged case set.
+    * the broker's response unchanged. Rows merge on decoded strings
+    * ([[RefHllWire.merge]]) and the output carries fresh dictionaries over
+    * the merged case set, so a SmallEnum dim can widen to BigEnum.
     */
-  def aqlHllBinary(queryJson: String): Array[Byte] = {
-    val q = stripSort(AqlJson.parseQuery(queryJson))
-    val parsed = ExprParser.parse(q.measures.head.sqlExpression)
-    parsed match {
+  def aqlHllBinary(q0: AqlQuery): Array[Byte] = {
+    val q = stripSort(q0)
+    ExprParser.parse(q.measures.head.sqlExpression) match {
       case Expr.Call(op, _) if op == "countdistincthll" || op == "hll" =>
       case _ => throw new IllegalArgumentException(
         "application/hll requires an HLL measure")
     }
-    val body = requestBody(q)
-    val bodies = consistentWave(body, "application/hll")(identity)
-    val blocks = bodies.map { bytes =>
-      RefHllWire.readResults(bytes).head match {
-        case Right(b) => b
-        case Left(err) => throw new IllegalStateException(s"instance error: $err")
-      }
-    }
-    val template = blocks.head
-    val n = template.dataTypes.length
-    // a dim is enum-typed if ANY instance shipped a dictionary for it (an
-    // instance with no rows ships none)
-    val isEnum = (0 until n).map(d => blocks.exists(_.enumDicts.contains(d)))
-    // merge on decoded logical values: dictionary string for enum dims,
-    // the raw number otherwise
-    val merged = scala.collection.mutable.LinkedHashMap
-      .empty[List[Option[Any]], Array[Byte]]
-    blocks.foreach { block =>
-      block.rows.zipWithIndex.foreach { case (row, r) =>
-        val key: List[Option[Any]] = (0 until n).map { d =>
-          if (isEnum(d)) block.dimString(r, d).map(identity[Any])
-          else row.dims(d).map(identity[Any])
-        }.toList
-        merged.get(key) match {
-          case Some(regs) => graft.functions.Hll.mergeInto(regs, row.registers)
-          case None => merged(key) = row.registers.clone()
-        }
-      }
-    }
-    // fresh dictionaries over the merged case set; dim types re-derived
-    // from merged dictionary sizes (a SmallEnum dim can widen to BigEnum
-    // after the merge), widths re-slotted the way the instance writer does
-    val dicts: Map[Int, Seq[String]] = (0 until n).flatMap { d =>
-      if (!isEnum(d)) None
-      else Some(d -> merged.keys.flatMap(_(d)).map(_.toString).toSeq.distinct.sorted)
-    }.toMap
-    val dictIndex: Map[Int, Map[String, Long]] = dicts.map { case (d, cases) =>
-      d -> cases.zipWithIndex.map { case (s, i) => s -> i.toLong }.toMap
-    }
-    val dimTypes: Seq[Long] = (0 until n).map { d =>
-      if (isEnum(d)) {
-        if (dicts(d).length <= 256) 0x00080008L else 0x00090010L
-      } else template.dataTypes(d)
-    }
-    val widthOf: Long => Int = t => ((t & 0xFFFF) / 8).toInt
-    val slotOrder = (0 until n).sortBy(d => -widthOf(dimTypes(d)))
-    val dimIndexes = {
-      val slotOf = slotOrder.zipWithIndex.map { case (dim, slot) => dim -> slot }.toMap
-      (0 until n).map(slotOf)
-    }
-    val dimsPerWidth = Seq(16, 8, 4, 2, 1).map(w =>
-      (0 until n).count(d => widthOf(dimTypes(d)) == w))
-    val rows = merged.map { case (key, regs) =>
-      val dims = (0 until n).map { d =>
-        key(d).map {
-          case s: String => dictIndex(d)(s)
-          case l: Long => l
-          case other => other.toString.toLong
-        }
-      }
-      var nonZero = 0
-      regs.foreach(b => if (b != 0) nonZero += 1)
-      RefHllWire.RefRow(dims, regs, nonZero)
-    }.toSeq
-    val block = RefHllWire.RefBlock(dimsPerWidth, dimIndexes, dimTypes, dicts, rows)
-    RefHllWire.writeResults(Seq(Right(RefHllWire.writeBlock(block))))
+    val (numericTypes, rows) = hllWave(q)
+    RefHllWire.encode(rows, numericTypes)
   }
 
   private def mergeHll(q: AqlQuery): JValue = {
-    val body = requestBody(q)
-    val bodies = consistentWave(body, "application/hll")(identity)
-    // per-instance blocks → (dim keys → registers), merged by register max
-    val merged = scala.collection.mutable.LinkedHashMap.empty[List[String], Array[Byte]]
-    bodies.foreach { bytes =>
-      val block = RefHllWire.readResults(bytes).head match {
-        case Right(b) => b
-        case Left(err) => throw new IllegalStateException(s"instance error: $err")
-      }
-      block.rows.zipWithIndex.foreach { case (row, r) =>
-        val key = row.dims.indices
-          .map(d => block.dimString(r, d).getOrElse("NULL")).toList
-        merged.get(key) match {
-          case Some(regs) => Hll.mergeInto(regs, row.registers)
-          case None => merged(key) = row.registers.clone()
-        }
-      }
-    }
+    val (_, rows) = hllWave(q)
     val measureName = q.measures.head.alias.filter(_.nonEmpty).getOrElse("value")
     if (q.dimensionList.isEmpty) {
-      val est = merged.headOption
+      val est = rows.headOption
         .map(kv => JDouble(Hll.estimate(kv._2).toDouble)).getOrElse(JNull)
       return JObject(measureName -> est)
     }
-    merged.foldLeft(JObject(): JValue) { case (tree, (key, regs)) =>
-      insert(tree, key, JDouble(Hll.estimate(regs).toDouble))
+    rows.foldLeft(JObject(): JValue) { case (tree, (key, regs)) =>
+      insert(tree, key.map(_.fold("NULL")(_.toString)).toList,
+        JDouble(Hll.estimate(regs).toDouble))
     }
   }
+
+  /** One scatter wave of binary partials, register-max merged per group. */
+  private def hllWave(q: AqlQuery) =
+    RefHllWire.merge(consistentWave(requestBody(q), "application/hll")(identity))
 
   private def insert(tree: JValue, keys: List[String], leaf: JValue): JValue =
     keys match {

@@ -97,9 +97,8 @@ final class BrokerServer private (broker: Broker, instances: () => Seq[String],
           // merged binary sketch body for the first query (the same
           // content negotiation as a single instance)
           val first = AqlJson.parseRequest(body).queries.head
-          implicit val formats: Formats = DefaultFormats
           val bin =
-            try broker.aqlHllBinary(org.json4s.jackson.Serialization.write(first))
+            try broker.aqlHllBinary(first)
             catch {
               case NonFatal(e) =>
                 countOutcome(Left(Option(e.getMessage).getOrElse("")))

@@ -7,12 +7,12 @@ import graft.functions.Hll
 
 /** BYTE-EXACT reader/writer for the reference's `application/hll` wire
   * format (/root/reference/query/common/hll.go:44-70 layout doc; parser at
-  * :364-500, envelope at :961-990) — as opposed to [[HllWire]], this
-  * module's engine-native format, which deviates by design (uniform 8-byte
-  * dims, 3-byte sparse registers). RefHllWire exists to replay the
+  * :364-500, envelope at :961-990) — the engine's only binary HLL codec.
+  * Members ([[QueryService.aqlBinary]]) and the broker
+  * ([[Broker.aqlHllBinary]]) both answer through [[encode]], the broker
+  * unions member partials through [[merge]], and the reader replays the
   * reference's golden fixtures (`testing/data/query/hll*`, written by
-  * query/hll_test.go:210-271) and to serve compat clients that parse the
-  * reference layout:
+  * query/hll_test.go:210-271):
   *
   *  - envelope: `[u32 0xACED0102][u32 pad]` then per query
   *    `[u32 size][u8 isErr][3 pad][body]`; error bodies are the error
@@ -34,6 +34,10 @@ import graft.functions.Hll
 object RefHllWire {
 
   val Magic: Int = 0xACED0102
+  // AQL storage types (data type << 16 | bit width) the encoder assigns
+  val SmallEnum: Long = 0x00080008L
+  val BigEnum: Long = 0x00090010L
+  val Uint32: Long = 0x00060020L
   val DenseDataLength: Int = 16384
   val DenseThreshold: Int = DenseDataLength / 4
   val EnumDelimiter = "\u0000\n"
@@ -305,6 +309,78 @@ object RefHllWire {
       } else buf.put(r.registers, 0, DenseDataLength)
     }
     out
+  }
+
+  /** Serialize logical result rows as a whole response (envelope + one
+    * result block). Each row is its dims — `Some(String)`, `Some(Long)` or
+    * None for null — and its dense register array. A dim holding any string
+    * rides as an enum (the reference's enum translation, query/hll.go
+    * EnumDicts): a sorted dictionary of its distinct strings, SmallEnum up
+    * to 256 cases, BigEnum beyond; every other dim keeps `numericTypes(d)`.
+    * Slots are assigned in width-descending order (dim_util.go:43-58), and
+    * each row's count field is its NonZero register count — the reference's
+    * result writer stores NonZeroRegisters unconditionally
+    * (hll.go:1107-1121), so at >= DenseThreshold readers take the dense
+    * branch from the same value.
+    */
+  def encode(rows: Seq[(Seq[Option[Any]], Array[Byte])],
+      numericTypes: Seq[Long]): Array[Byte] = {
+    val n = numericTypes.length
+    val dicts: Map[Int, Seq[String]] = (0 until n).flatMap { d =>
+      val strings = rows.flatMap(_._1(d).collect { case s: String => s })
+      if (strings.isEmpty) None else Some(d -> strings.distinct.sorted)
+    }.toMap
+    val dictIndex = dicts.map { case (d, cases) => d -> cases.zipWithIndex.toMap }
+    val dimTypes = (0 until n).map { d =>
+      dicts.get(d) match {
+        case Some(cases) if cases.length <= 256 => SmallEnum
+        case Some(_) => BigEnum
+        case None => numericTypes(d)
+      }
+    }
+    val widthOf = (t: Long) => ((t & 0xFFFF) / 8).toInt
+    val slotOf = (0 until n).sortBy(d => -widthOf(dimTypes(d))).zipWithIndex.toMap
+    val dimsPerWidth = Widths.toSeq.map(w => dimTypes.count(t => widthOf(t) == w))
+    val refRows = rows.map { case (dims, regs) =>
+      val values = dims.zipWithIndex.map {
+        case (Some(s: String), d) => Some(dictIndex(d)(s).toLong)
+        case (Some(l: Long), _) => Some(l)
+        case (None, _) => None
+        case (Some(other), _) => throw new IllegalArgumentException(
+          s"application/hll dims must be integral or string, got ${other.getClass.getSimpleName}")
+      }
+      RefRow(values, regs, regs.count(_ != 0))
+    }
+    val block = RefBlock(dimsPerWidth, (0 until n).map(slotOf), dimTypes, dicts, refRows)
+    writeResults(Seq(Right(writeBlock(block))))
+  }
+
+  /** Register-max merge of whole responses (the first result block of
+    * each) into one sketch per dim key, in first-seen order — the broker's
+    * union of member partials (query_plan_agg.go postProcessHLLBinary).
+    * Enum dictionaries are local to each response, so a dim that carries a
+    * dictionary in any response keys on its decoded string; every other
+    * dim keys on its raw value. Also returns the first response's dim
+    * types, the numeric types to re-encode the merged rows with.
+    */
+  def merge(bodies: Seq[Array[Byte]]): (Seq[Long], Seq[(Seq[Option[Any]], Array[Byte])]) = {
+    val blocks = bodies.map { bytes =>
+      readResults(bytes).head match {
+        case Right(b) => b
+        case Left(err) => throw new IllegalStateException(s"instance error: $err")
+      }
+    }
+    val n = blocks.head.dataTypes.length
+    val isEnum = (0 until n).map(d => blocks.exists(_.enumDicts.contains(d)))
+    val merged = scala.collection.mutable.LinkedHashMap.empty[Seq[Option[Any]], Array[Byte]]
+    for (block <- blocks; (row, r) <- block.rows.zipWithIndex) {
+      val key = (0 until n).map(d => if (isEnum(d)) block.dimString(r, d) else row.dims(d))
+      merged.get(key) match {
+        case Some(regs) => Hll.mergeInto(regs, row.registers)
+        case None => merged(key) = row.registers.clone()
+      }
+    }
+    (blocks.head.dataTypes, merged.toSeq)
   }
 
   /** Serialize the full envelope (HLLQueryResults, hll.go:961-990). */

@@ -409,7 +409,7 @@ object SliceRebalance {
               // the epoch token (seqlock read-side begin; GraftServer
               // notes it again after the query body ran)
               val marker = graft.ingest.DrainMarker.read(sharedArchiveDir, conf)
-              ArchiveEpoch.note(marker)
+              ArchiveEpoch.note(sharedArchiveDir, marker)
               val syncedSeq = graft.ingest.DrainMarker.readSynced(localDir, conf)
               val st = graft.ingest.DrainMarker.staleDays(marker, syncedSeq) match {
                 case Some(days) => days

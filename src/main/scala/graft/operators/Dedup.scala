@@ -167,6 +167,9 @@ object Dedup {
     */
   def bandBuckets(sigs: DataFrame, idCol: String,
       rowsPerBand: Int = RowsPerBand): DataFrame = {
+    // a remainder would leave the signature's last hashes in no band
+    require(rowsPerBand > 0 && NumHashes % rowsPerBand == 0,
+      s"rowsPerBand $rowsPerBand must divide the $NumHashes-hash signature")
     val bands = NumHashes / rowsPerBand
     sigs.select(
       col(idCol),

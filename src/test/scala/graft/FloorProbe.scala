@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
 
 /** Attribution probe for the ~0.1–0.15 s per-gate session floor
-  * (OPTIMIZATION_r16.md): decompose a trivial gate's wall time into
+  * (its parallelismFirst A/B runs are plans/r16/bench_r16_pf_{a1,a2,b1,b2}.json:
+  * pf=true 167.4/153.7 s vs pf=false 178.5/156.5 s): decompose a trivial gate's wall time into
   * driver-side planning (analysis → physical plan, forced without
   * execution) vs execution (noop write: AQE stage jobs + task scheduling
   * + codegen), and measure the irreducible minimum (a pre-planned

@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import graft.SparkSpec
 import graft.api.GraftServer
-import graft.aql.Catalog
+import graft.aql.{AqlJson, Catalog}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -204,7 +204,7 @@ class BrokerSpec extends SparkSpec {
 
   test("broker binary HLL equals the single-instance binary sketch") {
     val q = query("countDistinctHLL(user_id)")
-    val mergedBin = broker.aqlHllBinary(q)
+    val mergedBin = broker.aqlHllBinary(AqlJson.parseQuery(q))
     val single = client.send(
       HttpRequest.newBuilder(URI.create(
         s"http://localhost:${whole.boundPort}/query/aql"))

@@ -79,20 +79,89 @@ class HandoffEpochSpec extends SparkSpec {
     ArchiveEpoch.begin()
     try {
       assert(ArchiveEpoch.collect().isEmpty, "no shared reads → no token")
-      ArchiveEpoch.note(DrainMarker.Marker(3L, Nil))
+      ArchiveEpoch.note("/a", DrainMarker.Marker(3L, Nil))
       assert(ArchiveEpoch.collect().contains("3"))
-      ArchiveEpoch.note(DrainMarker.Marker(3L, Nil))
+      ArchiveEpoch.note("/a", DrainMarker.Marker(3L, Nil))
       assert(ArchiveEpoch.collect().contains("3"), "repeat agreement keeps the seq")
-      ArchiveEpoch.note(DrainMarker.Marker(4L, Nil))
+      ArchiveEpoch.note("/a", DrainMarker.Marker(4L, Nil))
       assert(ArchiveEpoch.collect().contains(ArchiveEpoch.Torn),
         "a commit between two reads (seq moved) must read as torn")
     } finally ArchiveEpoch.end()
     ArchiveEpoch.begin()
     try {
-      ArchiveEpoch.note(DrainMarker.Marker(5L, Nil, inflight = true))
+      ArchiveEpoch.note("/a", DrainMarker.Marker(5L, Nil, inflight = true))
       assert(ArchiveEpoch.collect().contains(ArchiveEpoch.Torn),
         "an inflight marker must read as torn")
     } finally ArchiveEpoch.end()
+  }
+
+  test("archive epoch token: each directory is tracked on its own") {
+    def token(observed: (String, Long)*): Option[String] = {
+      ArchiveEpoch.begin()
+      try {
+        observed.foreach { case (dir, seq) => ArchiveEpoch.note(dir, DrainMarker.Marker(seq, Nil)) }
+        assert(ArchiveEpoch.noted().toSet == observed.map(_._1).toSet)
+        ArchiveEpoch.collect()
+      } finally ArchiveEpoch.end()
+    }
+    // two archives at different seqs, each read consistently: not torn
+    val both = token("/b" -> 7L, "/a" -> 3L, "/b" -> 7L, "/a" -> 3L)
+    assert(both.contains("3,7"), s"got $both")
+    // a member that saw another seq for the same directory answers a
+    // different token, so the broker still retries the mixed wave
+    assert(token("/a" -> 4L, "/b" -> 7L) != both)
+    assert(token("/a" -> 3L, "/b" -> 7L, "/b" -> 8L).contains(ArchiveEpoch.Torn))
+  }
+
+  test("two slice-served tables: a query's epoch token covers only the archive it read") {
+    Tables.eventsArchived(spark, sfDir)
+    val sharedDir = tmp("ht-shared")
+    SliceBootstrap.copySlice(spark, Tables.eventsArchivePath(sfDir), sharedDir)
+    val dirs = Map("a" -> tmp("ht-a"), "b" -> tmp("ht-b"))
+    val topoDir = tmp("ht-topo")
+    SliceRebalance.rebalance(spark, sharedDir, dirs, topoDir)
+    // the second table's shared archive has drained once more than the
+    // events archive, so the two markers' seqs differ
+    val otherDir = tmp("ht-other")
+    val conf = spark.sparkContext.hadoopConfiguration
+    DrainMarker.bump(otherDir, conf, Nil)
+    assert(DrainMarker.read(otherDir, conf).seq != DrainMarker.read(sharedDir, conf).seq)
+
+    val base = Catalog.testdata(sfDir)
+    def member(slice: String): GraftServer = {
+      val srv = new GraftServer(
+        SliceRebalance.servingCatalog(base, dirs(slice), topoDir, slice,
+          sharedArchiveDir = sharedDir), spark)
+      srv.sliceServe("events", sharedDir,
+        () => SliceSync.sync(spark, sharedDir, dirs(slice), topoDir, slice))
+      srv.sliceServe("lineitem", otherDir)
+      srv.start()
+      srv
+    }
+    val pa = member("a")
+    val pb = member("b")
+    try {
+      val resp = client.send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+          s"http://localhost:${pa.boundPort}/query/aql"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
+            s"""{"queries": [$wideQuery]}""")).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 200, resp.body())
+      assert(resp.headers().firstValue("X-Graft-Archive-Epoch").orElse(null) ==
+        DrainMarker.read(sharedDir, conf).seq.toString,
+        "the token must carry the events archive's seq alone")
+
+      val broker = new Broker(Seq(
+        s"http://localhost:${pa.boundPort}", s"http://localhost:${pb.boundPort}"))
+      val whole = new GraftServer(base, spark)
+      whole.start()
+      try {
+        val single = new Broker(Seq(s"http://localhost:${whole.boundPort}"))
+        assert(total(broker.aql(wideQuery)) == total(single.aql(wideQuery)),
+          "the sliced tier must answer exactly, without a torn-epoch failure")
+      } finally whole.stop()
+    } finally Seq(pa, pb).foreach(_.stop())
   }
 
   test("mid-swap archive rewrite: the broker retries the torn wave and never merges a short count") {

@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Hll
 
-/** Round-trip + merge-interop tests for the application/hll binary format. */
+/** Round-trip + merge-interop tests for the application/hll binary format
+  * ([[RefHllWire]]).
+  */
 class HllWireSpec extends AnyFunSuite {
 
   private def sketchOf(values: Seq[Long]): Array[Byte] = {
@@ -15,62 +17,97 @@ class HllWireSpec extends AnyFunSuite {
     regs
   }
 
+  private val Int64 = 0x000d0040L
+
+  private def block(bytes: Array[Byte]): RefHllWire.RefBlock =
+    RefHllWire.readResults(bytes) match {
+      case Seq(Right(b)) => b
+      case other => fail(s"expected one result block, got $other")
+    }
+
   test("sparse and dense rows round-trip bit-for-bit") {
     val rnd = new Random(42)
     val sparse = sketchOf(Seq.tabulate(100)(_ => rnd.nextLong())) // ~100 regs -> sparse
     val dense = sketchOf(Seq.tabulate(40000)(_ => rnd.nextLong())) // >4096 regs -> dense
     val rows = Seq(
-      HllWire.HllRow(Seq(Some(1L), Some(10L)), sparse),
-      HllWire.HllRow(Seq(Some(2L), None), dense))
+      Seq(Some(1L), Some(-10L)) -> sparse,
+      Seq(Some(2L), None) -> dense)
 
-    val bytes = HllWire.write(rows)
-    val back = HllWire.read(bytes)
+    // a 4-byte and an 8-byte dim: the wider one takes slot 0
+    val back = block(RefHllWire.encode(rows, Seq(RefHllWire.Uint32, Int64)))
 
+    assert(back.dataTypes == Seq(RefHllWire.Uint32, Int64))
+    assert(back.numDimsPerDimWidth == Seq(0, 1, 1, 0, 0))
+    assert(back.dimIndexes == Seq(1, 0))
     assert(back.rows.length == 2)
-    assert(back.rows(0).dims == Seq(Some(1L), Some(10L)))
+    assert(back.rows(0).dims == Seq(Some(1L), Some(-10L)))
     assert(back.rows(1).dims == Seq(Some(2L), None))
+    assert(back.rows(0).storedCount < RefHllWire.DenseThreshold)
+    assert(back.rows(1).storedCount >= RefHllWire.DenseThreshold)
     assert(back.rows(0).registers.toSeq == sparse.toSeq)
     assert(back.rows(1).registers.toSeq == dense.toSeq)
     assert(back.estimates == Seq(Hll.estimate(sparse), Hll.estimate(dense)))
   }
 
   test("magic header enforced") {
-    val bytes = HllWire.write(Seq(HllWire.HllRow(Seq(Some(1L)), sketchOf(Seq(1, 2, 3)))))
+    val bytes = RefHllWire.encode(Seq(Seq(Some(1L)) -> sketchOf(Seq(1, 2, 3))),
+      Seq(RefHllWire.Uint32))
     assert(java.nio.ByteBuffer.wrap(bytes)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt() == 0xACED0102)
     bytes(0) = 0x00
-    intercept[IllegalArgumentException](HllWire.read(bytes))
+    intercept[IllegalArgumentException](RefHllWire.readResults(bytes))
   }
 
   test("string-dim dictionaries round-trip through the dictionary section") {
     val rows = Seq(
-      HllWire.HllRow(Seq(Some(0L), Some(5L)), sketchOf(Seq(1, 2))),
-      HllWire.HllRow(Seq(Some(1L), None), sketchOf(Seq(3))),
-      HllWire.HllRow(Seq(Some(2L), Some(7L)), sketchOf(Seq(4, 5, 6))))
-    val dicts = Map(0 -> Seq("click", "purchase", "view"))
-    val back = HllWire.read(HllWire.writeWithDicts(rows, dicts))
-    assert(back.dicts == dicts)
-    assert(back.dimString(0, 0).contains("click"))
-    assert(back.dimString(1, 0).contains("purchase"))
-    assert(back.dimString(2, 0).contains("view"))
+      Seq(Some("view"), Some(5L)) -> sketchOf(Seq(1, 2)),
+      Seq(Some("click"), None) -> sketchOf(Seq(3)),
+      Seq(None, Some(7L)) -> sketchOf(Seq(8)),
+      Seq(Some("purchase"), Some(7L)) -> sketchOf(Seq(4, 5, 6)))
+    val back = block(RefHllWire.encode(rows, Seq(RefHllWire.Uint32, RefHllWire.Uint32)))
+    assert(back.enumDicts == Map(0 -> Seq("click", "purchase", "view")))
+    assert(back.dataTypes == Seq(RefHllWire.SmallEnum, RefHllWire.Uint32))
+    assert(back.dimString(0, 0).contains("view"))
+    assert(back.dimString(1, 0).contains("click"))
+    assert(back.dimString(2, 0).isEmpty)        // null enum dim stays null
+    assert(back.dimString(3, 0).contains("purchase"))
     assert(back.dimString(0, 1).contains("5")) // numeric dim unaffected
     assert(back.dimString(1, 1).isEmpty)       // null stays null
-    assert(back.rows.map(_.registers.toSeq) == rows.map(_.registers.toSeq))
+    assert(back.rows.map(_.registers.toSeq) == rows.map(_._2.toSeq))
+  }
+
+  test("more than 256 distinct strings encode as BigEnum and decode back") {
+    val names = Seq.tabulate(300)(i => f"user-$i%03d").reverse
+    val rows = names.zipWithIndex.map { case (s, i) => Seq(Some(s)) -> sketchOf(Seq(i.toLong)) }
+    val back = block(RefHllWire.encode(rows, Seq(RefHllWire.Uint32)))
+    assert(back.dataTypes == Seq(0x00090010L))
+    assert(back.numDimsPerDimWidth == Seq(0, 0, 0, 1, 0))
+    assert(back.rows.indices.map(r => back.dimString(r, 0).get) == names)
+    assert(back.rows.map(_.registers.toSeq) == rows.map(_._2.toSeq))
   }
 
   test("deserialized sketches merge to the same estimate as a direct union sketch") {
     val a = Seq.tabulate(5000)(i => i.toLong)
     val b = Seq.tabulate(5000)(i => (i + 2500).toLong)
-    val bytes = HllWire.write(Seq(
-      HllWire.HllRow(Seq(Some(1L)), sketchOf(a)),
-      HllWire.HllRow(Seq(Some(2L)), sketchOf(b))))
-    val back = HllWire.read(bytes)
+    val bytes = RefHllWire.encode(Seq(
+      Seq(Some(1L)) -> sketchOf(a),
+      Seq(Some(2L)) -> sketchOf(b)), Seq(RefHllWire.Uint32))
+    val back = block(bytes)
 
     val merged = back.rows(0).registers.clone()
     Hll.mergeInto(merged, back.rows(1).registers)
     val direct = sketchOf(a ++ b)
     assert(merged.toSeq == direct.toSeq)
     assert(Hll.estimate(merged) == Hll.estimate(direct))
+
+    // the broker's merge of two partials keyed on the same decoded dims
+    // (each partial with its own local dictionary) is the same union
+    def partial(values: Seq[Long]) =
+      RefHllWire.encode(Seq(Seq(Some("k")) -> sketchOf(values)), Seq(RefHllWire.Uint32))
+    val (types, rows) = RefHllWire.merge(Seq(partial(a), partial(b)))
+    assert(types == Seq(RefHllWire.SmallEnum))
+    assert(rows.map(_._1) == Seq(Seq(Some("k"))))
+    assert(rows.head._2.toSeq == direct.toSeq)
   }
 
   // ---- reference golden fixtures (RefHllWire) -----------------------------

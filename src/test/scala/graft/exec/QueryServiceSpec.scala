@@ -1,7 +1,7 @@
 package graft.exec
 
 import graft.SparkSpec
-import graft.aql.Catalog
+import graft.aql.{AqlJson, Catalog}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -41,13 +41,13 @@ class QueryServiceSpec extends SparkSpec {
   }
 
   test("application/hll binary: estimates round-trip within HLL tolerance") {
-    val bin = service.aqlBinary(s"""{
+    val bin = service.aqlBinary(AqlJson.parseQuery(s"""{
       "table": "events",
       "measures": [{"sqlExpression": "countDistinctHLL(user_id)"}],
       "dimensions": [{"alias": "day", "sqlExpression": "ts", "timeBucketizer": "day"}],
       "timeFilter": {"from": "1706400000", "to": "1706659200"},
       "now": $Now
-    }""")
+    }"""))
     // the endpoint emits the REFERENCE byte layout end to end
     val result = RefHllWire.readResults(bin).head.toOption.get
     assert(result.rows.nonEmpty)
@@ -87,7 +87,7 @@ class QueryServiceSpec extends SparkSpec {
       "timeFilter": {"from": "1704067200", "to": "1706659200"},
       "now": $Now
     }"""
-    val bin = RefHllWire.readResults(service.aqlBinary(q)).head.toOption.get
+    val bin = RefHllWire.readResults(service.aqlBinary(AqlJson.parseQuery(q))).head.toOption.get
     val json = JsonMethods.parse(service.aql(s"""{"queries": [$q]}"""))
     val fromJson = (json \ "results")(0).asInstanceOf[JObject].values
       .map { case (k, v) => k -> v.asInstanceOf[Double].toLong }

@@ -47,6 +47,22 @@ class DedupSpec extends SparkSpec {
     assert(truth >= (n * 0.85).toLong, s"only $truth of $n planted pairs within h=8")
   }
 
+  test("bandBuckets: rowsPerBand must divide the signature; 4 and 2 band every hash") {
+    import spark.implicits._
+    val sig = (1L to Dedup.NumHashes.toLong).map(_ * 7919L)
+    val sigs = Seq((1L, sig)).toDF("id", "sig")
+    // 64 / 3 would silently leave the last hash out of every band
+    intercept[IllegalArgumentException](Dedup.bandBuckets(sigs, "id", rowsPerBand = 3))
+    Seq(4, 2).foreach { rows =>
+      val got = Dedup.bandBuckets(sigs, "id", rows).collect()
+        .map(r => r.getInt(1) -> r.getLong(2)).toSeq.sortBy(_._1)
+      val expected = sig.grouped(rows).toSeq.zipWithIndex.map { case (band, b) =>
+        b -> spark.range(1).select(xxhash64(band.map(lit): _*)).head().getLong(0)
+      }
+      assert(got == expected, s"rowsPerBand=$rows")
+    }
+  }
+
   test("incremental dedup: exact copies die in stage 1, mutated in stage 2, fresh docs survive") {
     import spark.implicits._
     val corpus = Seq(
